@@ -46,8 +46,9 @@ object Bench {
     val only = sys.env.get("SPARK_GRAFT_ONLY").filter(_.trim.nonEmpty)
       .map(_.split(",").map(_.trim).toSet)
     // Per-run wall times on this box vary up to ±40% with machine
-    // contention (BENCH_r03 was 2× BENCH_r02 on identical code), so each
-    // query is timed SPARK_GRAFT_RUNS times (default 3) and the MINIMUM
+    // contention (one round's sweep took 2× the previous one's on
+    // identical code), so each query is timed SPARK_GRAFT_RUNS times
+    // (default 3) and the MINIMUM
     // — the stable low-noise estimator — is reported.
     val runs = sys.env.get("SPARK_GRAFT_RUNS").filter(_.trim.nonEmpty)
       .map(_.trim.toInt).filter(_ > 0).getOrElse(3)

@@ -15,7 +15,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * So each fixture table is written to parquet ONCE per (testdata
   * generation, fixture format version, kind, scale factor) under the
   * JVM temp dir and every later use — all bench passes, verify,
-  * repeated local runs, the StressBench ×N sweeps — is a plain parquet
+  * repeated local runs — is a plain parquet
   * scan, which is exactly the I/O shape the 100 TB design point has.
   * The cache key fingerprints the `documents.parquet` file (path,
   * mtime, size) AND [[FORMAT_VERSION]], so regenerated testdata or an
@@ -186,19 +186,6 @@ object MediaFixtures {
   def table(spark: SparkSession, sfDir: String, kind: String): DataFrame =
     materialized(spark, cacheDir(sfDir, kind),
       () => kinds(kind)(spark, Tables.documents(spark, sfDir)))
-
-  /** The ×`factor` replicated fixture table (disjoint doc_id ranges per
-    * replica, [[StressBench.replicate]]'s key arithmetic) — the
-    * StressBench corpora, cached under a scale-suffixed key so the
-    * stress rows scan parquet instead of re-encoding the ×N payloads
-    * inside their timed bodies.
-    */
-  def tableReplicated(spark: SparkSession, sfDir: String, kind: String,
-                      factor: Int): DataFrame =
-    if (factor <= 1) table(spark, sfDir, kind)
-    else materialized(spark, cacheDir(sfDir, s"${kind}_x$factor"),
-      () => kinds(kind)(spark,
-        StressBench.replicate(Tables.documents(spark, sfDir), factor, Seq("doc_id"))))
 
   /** Pre-materialize (untimed) every fixture the given queries read.
     * The warm-up is a REAL data scan — `count()` alone is answered

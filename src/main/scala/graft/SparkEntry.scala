@@ -16,13 +16,12 @@ import graft.ext._
 object SparkEntry {
 
   /** Build-once-per-session store fixtures for the IMMUTABLE-store
-    * query family (round 18 — verdict ask #7, the `StressBench.
-    * lexStoreDir` pattern): the hybrid/probe queries each used to
-    * build their own full-corpus store per invocation, so the sweep
-    * timed ~6 redundant index builds. Stores are deterministic
-    * functions of (testdata dir), so sharing one build per
-    * (applicationId, testdata dir) leaves every hash unchanged and
-    * makes the bench measure PROBES (after the family's first member
+    * query family (round 18 — verdict ask #7): the hybrid/probe
+    * queries each used to build their own full-corpus store per
+    * invocation, so the sweep timed ~6 redundant index builds. Stores
+    * are deterministic functions of (testdata dir), so sharing one
+    * build per (applicationId, testdata dir) leaves every hash
+    * unchanged and makes the bench measure PROBES (after the family's first member
     * pays the build — bench numbers for this family are probe-cost,
     * annotated in RESULTS.md). ONLY read-only consumers share a
     * fixture; every mutating query (append/delete/stream/compact/
@@ -44,6 +43,16 @@ object SparkEntry {
         build(dir)
         dir
       })
+  /** A store dir private to one mutating query:
+    * `<tmpdir>/<prefix><testdata dir name>_<applicationId>`, deleted on
+    * JVM exit.
+    */
+  private def privateDir(s: SparkSession, prefix: String, d: String): String = {
+    val dir = new java.io.File(sys.props("java.io.tmpdir"),
+      prefix + new java.io.File(d).getName + "_" + s.sparkContext.applicationId).getPath
+    graft.Tables.deleteOnExit(dir)
+    dir
+  }
   private def lexStoreFixture(s: SparkSession, d: String): String =
     fixture(s, "lex_" + new java.io.File(d).getName) { dir =>
       TextOps.bm25IndexInit(Tables.documents(s, d), dir)
@@ -269,10 +278,7 @@ object SparkEntry {
       import org.apache.spark.sql.functions.{col, md5, substring}
       val docs = Tables.documents(s, d)
       val storedSide = substring(md5(col("doc_id").cast("string")), 1, 1) < "8"
-      val lexDir = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_bm25_inc_" + new java.io.File(d).getName + "_" +
-          s.sparkContext.applicationId).getPath
-      graft.Tables.deleteOnExit(lexDir)
+      val lexDir = privateDir(s, "graft_bm25_inc_", d)
       TextOps.bm25IndexInit(docs.filter(storedSide), lexDir)
       TextOps.bm25IndexAppend(s, docs.filter(!storedSide), lexDir)
       TextOps.bm25StoreTopDocs(s, lexDir)
@@ -285,10 +291,7 @@ object SparkEntry {
     "q_bm25_store_del" -> ((s, d) => {
       import org.apache.spark.sql.functions.col
       val docs = Tables.documents(s, d)
-      val lexDir = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_bm25_del_" + new java.io.File(d).getName + "_" +
-          s.sparkContext.applicationId).getPath
-      graft.Tables.deleteOnExit(lexDir)
+      val lexDir = privateDir(s, "graft_bm25_del_", d)
       TextOps.bm25IndexInit(docs, lexDir)
       TextOps.bm25IndexDelete(s,
         docs.filter(col("doc_id") % 5 === 2).select("doc_id"), lexDir)
@@ -302,10 +305,7 @@ object SparkEntry {
       import org.apache.spark.sql.functions.{col, lit, md5, substring}
       val docs = Tables.documents(s, d)
       val h = substring(md5(col("doc_id").cast("string")), 1, 1)
-      val lexDir = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_bm25_stream_" + new java.io.File(d).getName + "_" +
-          s.sparkContext.applicationId).getPath
-      graft.Tables.deleteOnExit(lexDir)
+      val lexDir = privateDir(s, "graft_bm25_stream_", d)
       TextOps.bm25IndexInit(docs.filter(h < "8"), lexDir)
       TextOps.bm25IndexStreamDay(s,
         docs.filter(h >= lit("8") && h < lit("c")), 0L, lexDir)
@@ -319,10 +319,7 @@ object SparkEntry {
       import org.apache.spark.sql.functions.{col, lit, md5, substring}
       val docs = Tables.documents(s, d)
       val h = substring(md5(col("doc_id").cast("string")), 1, 1)
-      val lexDir = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_bm25_compact_" + new java.io.File(d).getName + "_" +
-          s.sparkContext.applicationId).getPath
-      graft.Tables.deleteOnExit(lexDir)
+      val lexDir = privateDir(s, "graft_bm25_compact_", d)
       TextOps.bm25IndexInit(docs.filter(h < "8"), lexDir)
       TextOps.bm25IndexStreamDay(s,
         docs.filter(h >= lit("8") && h < lit("c")), 0L, lexDir)
@@ -340,10 +337,7 @@ object SparkEntry {
       import org.apache.spark.sql.functions.{col, lit, md5, substring}
       val docs = Tables.documents(s, d)
       val h = substring(md5(col("doc_id").cast("string")), 1, 1)
-      val base = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_bm25_ver_" + new java.io.File(d).getName + "_" +
-          s.sparkContext.applicationId).getPath
-      graft.Tables.deleteOnExit(base)
+      val base = privateDir(s, "graft_bm25_ver_", d)
       StoreVersioning.publish(s, base) { root =>
         TextOps.bm25IndexInit(docs.filter(h < "8"), root)
       }
@@ -368,10 +362,7 @@ object SparkEntry {
       import org.apache.spark.sql.functions.{col, lit, md5, substring}
       val docs = Tables.documents(s, d)
       val h = substring(md5(col("doc_id").cast("string")), 1, 1)
-      val dir = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_bm25_incf_" + new java.io.File(d).getName + "_" +
-          s.sparkContext.applicationId).getPath
-      graft.Tables.deleteOnExit(dir)
+      val dir = privateDir(s, "graft_bm25_incf_", d)
       val dp = new org.apache.hadoop.fs.Path(dir)
       dp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(dp, true)
       LexIncremental.init(docs.filter(h < "8"), dir)
@@ -392,10 +383,7 @@ object SparkEntry {
       import org.apache.spark.sql.functions.{col, lit, md5, substring}
       val docs = Tables.documents(s, d)
       val h = substring(md5(col("doc_id").cast("string")), 1, 1)
-      val dir = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_bm25_incfs_" + new java.io.File(d).getName + "_" +
-          s.sparkContext.applicationId).getPath
-      graft.Tables.deleteOnExit(dir)
+      val dir = privateDir(s, "graft_bm25_incfs_", d)
       val dp = new org.apache.hadoop.fs.Path(dir)
       dp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(dp, true)
       LexIncremental.init(docs.filter(h < "8"), dir)
@@ -414,10 +402,7 @@ object SparkEntry {
       import org.apache.spark.sql.functions.{col, md5, substring}
       val docs = Tables.documents(s, d)
       val h = substring(md5(col("doc_id").cast("string")), 1, 1)
-      val dir = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_bm25_inca_" + new java.io.File(d).getName + "_" +
-          s.sparkContext.applicationId).getPath
-      graft.Tables.deleteOnExit(dir)
+      val dir = privateDir(s, "graft_bm25_inca_", d)
       val dp = new org.apache.hadoop.fs.Path(dir)
       dp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(dp, true)
       LexIncremental.init(docs.filter(h < "8"), dir)
@@ -435,10 +420,7 @@ object SparkEntry {
       import org.apache.spark.sql.functions.{col, lit, md5, substring}
       val docs = Tables.documents(s, d)
       val h = substring(md5(col("doc_id").cast("string")), 1, 1)
-      val lexDir = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_bm25_sdel_" + new java.io.File(d).getName + "_" +
-          s.sparkContext.applicationId).getPath
-      graft.Tables.deleteOnExit(lexDir)
+      val lexDir = privateDir(s, "graft_bm25_sdel_", d)
       TextOps.bm25IndexInit(docs.filter(h < "8"), lexDir)
       TextOps.bm25IndexStreamDay(s,
         docs.filter(h >= lit("8") && h < lit("c")), 0L, lexDir)
@@ -456,10 +438,7 @@ object SparkEntry {
       import org.apache.spark.sql.functions.{col, md5, substring}
       val docs = Tables.documents(s, d)
       val storedSide = substring(md5(col("doc_id").cast("string")), 1, 1) < "8"
-      val lexDir = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_bm25_fsck_" + new java.io.File(d).getName + "_" +
-          s.sparkContext.applicationId).getPath
-      graft.Tables.deleteOnExit(lexDir)
+      val lexDir = privateDir(s, "graft_bm25_fsck_", d)
       TextOps.bm25IndexInit(docs.filter(storedSide), lexDir)
       TextOps.bm25IndexAppend(s, docs.filter(!storedSide), lexDir)
       TextOps.bm25StoreFsck(s, lexDir)
@@ -535,10 +514,7 @@ object SparkEntry {
       // applicationId in the path: two concurrent runs against the same
       // SF would otherwise race on a shared overwrite target. The
       // export is scratch output — reclaimed on JVM exit.
-      val out = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_shards_" + new java.io.File(d).getName + "_" +
-          s.sparkContext.applicationId).getPath
-      graft.Tables.deleteOnExit(out)
+      val out = privateDir(s, "graft_shards_", d)
       graft.ops.Layout.writeShardsManifest(Tables.documents(s, d), out, "doc_id")
     }),
     "q_dq_checks" -> ((s, d) => graft.ops.Quality.checkSuite(
@@ -775,10 +751,7 @@ object SparkEntry {
       import org.apache.spark.sql.functions.{col, md5, substring}
       val emb = Tables.embeddings(s, d)
       val storedSide = substring(md5(col("vec_id").cast("string")), 1, 1) < "8"
-      val dir = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_ivf_occ_" + new java.io.File(d).getName + "_" +
-          s.sparkContext.applicationId).getPath
-      graft.Tables.deleteOnExit(dir)
+      val dir = privateDir(s, "graft_ivf_occ_", d)
       Similarity.ivfIndexStoreInit(emb.filter(storedSide), dir)
       Similarity.ivfIndexStoreAppend(s, emb.filter(!storedSide), dir)
       Similarity.ivfIndexStoreOccupancy(s, dir)
@@ -792,10 +765,7 @@ object SparkEntry {
       import org.apache.spark.sql.functions.{col, lit, md5, substring}
       val emb = Tables.embeddings(s, d)
       val h = substring(md5(col("vec_id").cast("string")), 1, 1)
-      val dir = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_ivf_compact_" + new java.io.File(d).getName + "_" +
-          s.sparkContext.applicationId).getPath
-      graft.Tables.deleteOnExit(dir)
+      val dir = privateDir(s, "graft_ivf_compact_", d)
       Similarity.ivfIndexStoreInit(emb.filter(h < "8"), dir)
       Similarity.ivfIndexStreamDay(s,
         emb.filter(h >= lit("8") && h < lit("c")), 0L, dir)
@@ -817,10 +787,7 @@ object SparkEntry {
       import org.apache.spark.sql.functions.{col, lit, md5, substring}
       val emb = Tables.embeddings(s, d)
       val h = substring(md5(col("vec_id").cast("string")), 1, 1)
-      val base = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_ivf_ver_" + new java.io.File(d).getName + "_" +
-          s.sparkContext.applicationId).getPath
-      graft.Tables.deleteOnExit(base)
+      val base = privateDir(s, "graft_ivf_ver_", d)
       StoreVersioning.publish(s, base) { root =>
         Similarity.ivfIndexStoreInit(emb.filter(h < "8"), root)
       }
@@ -851,10 +818,7 @@ object SparkEntry {
       import org.apache.spark.sql.functions.{col, lit, md5, substring}
       val emb = Tables.embeddings(s, d)
       val h = substring(md5(col("vec_id").cast("string")), 1, 1)
-      val base = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_ivf_tt_" + new java.io.File(d).getName + "_" +
-          s.sparkContext.applicationId).getPath
-      graft.Tables.deleteOnExit(base)
+      val base = privateDir(s, "graft_ivf_tt_", d)
       StoreVersioning.publish(s, base) { root =>
         Similarity.ivfIndexStoreInit(emb.filter(h < "8"), root)
       }
@@ -879,10 +843,7 @@ object SparkEntry {
       import org.apache.spark.sql.functions.{col, md5, substring}
       val emb = Tables.embeddings(s, d)
       val storedSide = substring(md5(col("vec_id").cast("string")), 1, 1) < "8"
-      val dir = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_ivf_reseed_" + new java.io.File(d).getName + "_" +
-          s.sparkContext.applicationId).getPath
-      graft.Tables.deleteOnExit(dir)
+      val dir = privateDir(s, "graft_ivf_reseed_", d)
       Similarity.ivfIndexStoreInit(emb.filter(storedSide), dir)
       Similarity.ivfIndexStoreAppend(s, emb.filter(!storedSide), dir)
       Similarity.ivfIndexStoreReseed(s, dir)
@@ -896,10 +857,7 @@ object SparkEntry {
       import org.apache.spark.sql.functions.{col, md5, substring}
       val emb = Tables.embeddings(s, d)
       val storedSide = substring(md5(col("vec_id").cast("string")), 1, 1) < "8"
-      val dir = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_ivf_train_" + new java.io.File(d).getName + "_" +
-          s.sparkContext.applicationId).getPath
-      graft.Tables.deleteOnExit(dir)
+      val dir = privateDir(s, "graft_ivf_train_", d)
       Similarity.ivfIndexStoreInit(emb.filter(storedSide), dir)
       Similarity.ivfIndexStoreAppend(s, emb.filter(!storedSide), dir)
       Similarity.ivfIndexStoreTrain(s, dir)
@@ -915,10 +873,7 @@ object SparkEntry {
       import org.apache.spark.sql.functions.{col, lit, md5, substring}
       val emb = Tables.embeddings(s, d)
       val h = substring(md5(col("vec_id").cast("string")), 1, 1)
-      val dir = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_ivf_upd2_" + new java.io.File(d).getName + "_" +
-          s.sparkContext.applicationId).getPath
-      graft.Tables.deleteOnExit(dir)
+      val dir = privateDir(s, "graft_ivf_upd2_", d)
       Similarity.ivfIndexStoreInit(emb.filter(h < "8"), dir)
       Similarity.ivfIndexStoreAppend(s,
         emb.filter(h >= lit("8") && h < lit("c")), dir)
@@ -939,10 +894,7 @@ object SparkEntry {
       import org.apache.spark.sql.functions.{col, md5, substring}
       val emb = Tables.embeddings(s, d)
       val storedSide = substring(md5(col("vec_id").cast("string")), 1, 1) < "8"
-      val dir = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_ivf_upd_" + new java.io.File(d).getName + "_" +
-          s.sparkContext.applicationId).getPath
-      graft.Tables.deleteOnExit(dir)
+      val dir = privateDir(s, "graft_ivf_upd_", d)
       Similarity.ivfIndexStoreInit(emb.filter(storedSide), dir)
       Similarity.ivfIndexStoreAppend(s, emb.filter(!storedSide), dir)
       Similarity.ivfIndexStoreUpdateCentroids(s, dir)
@@ -957,10 +909,7 @@ object SparkEntry {
       import org.apache.spark.sql.functions.{col, md5, substring}
       val emb = Tables.embeddings(s, d)
       val storedSide = substring(md5(col("vec_id").cast("string")), 1, 1) < "8"
-      val dir = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_ivf_fsck_" + new java.io.File(d).getName + "_" +
-          s.sparkContext.applicationId).getPath
-      graft.Tables.deleteOnExit(dir)
+      val dir = privateDir(s, "graft_ivf_fsck_", d)
       Similarity.ivfIndexStoreInit(emb.filter(storedSide), dir)
       Similarity.ivfIndexStoreAppend(s, emb.filter(!storedSide), dir)
       Similarity.ivfIndexStoreFsck(s, dir)
@@ -974,10 +923,7 @@ object SparkEntry {
     "q_ivf_store_delete" -> ((s, d) => {
       import org.apache.spark.sql.functions.col
       val emb = Tables.embeddings(s, d)
-      val dir = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_ivf_del_" + new java.io.File(d).getName + "_" +
-          s.sparkContext.applicationId).getPath
-      graft.Tables.deleteOnExit(dir)
+      val dir = privateDir(s, "graft_ivf_del_", d)
       Similarity.ivfIndexStoreInit(emb, dir)
       Similarity.ivfIndexStoreDelete(s,
         emb.filter(col("vec_id") % 7 === 3).select("vec_id"), dir)
@@ -992,10 +938,7 @@ object SparkEntry {
     "q_ivf_store_delete_upd" -> ((s, d) => {
       import org.apache.spark.sql.functions.col
       val emb = Tables.embeddings(s, d)
-      val dir = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_ivf_delupd_" + new java.io.File(d).getName + "_" +
-          s.sparkContext.applicationId).getPath
-      graft.Tables.deleteOnExit(dir)
+      val dir = privateDir(s, "graft_ivf_delupd_", d)
       Similarity.ivfIndexStoreInit(emb, dir)
       Similarity.ivfIndexStoreDelete(s,
         emb.filter(col("vec_id") % 7 === 3).select("vec_id"), dir)
@@ -1013,10 +956,7 @@ object SparkEntry {
       import org.apache.spark.sql.functions.{col, lit, md5, substring}
       val emb = Tables.embeddings(s, d)
       val h = substring(md5(col("vec_id").cast("string")), 1, 1)
-      val dir = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_ivf_sdel_" + new java.io.File(d).getName + "_" +
-          s.sparkContext.applicationId).getPath
-      graft.Tables.deleteOnExit(dir)
+      val dir = privateDir(s, "graft_ivf_sdel_", d)
       Similarity.ivfIndexStoreInit(emb.filter(h < "8"), dir)
       Similarity.ivfIndexStreamDay(s,
         emb.filter(h >= lit("8") && h < lit("c")), 0L, dir)
@@ -1040,10 +980,7 @@ object SparkEntry {
       import org.apache.spark.sql.functions.{col, lit, md5, substring}
       val emb = Tables.embeddings(s, d)
       val h = substring(md5(col("vec_id").cast("string")), 1, 1)
-      val dir = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_ivf_incf_" + new java.io.File(d).getName + "_" +
-          s.sparkContext.applicationId).getPath
-      graft.Tables.deleteOnExit(dir)
+      val dir = privateDir(s, "graft_ivf_incf_", d)
       // rerun-safe: a fresh store per invocation (a re-init against an
       // existing manifest is a loud duplicate-version error BY DESIGN)
       val dp = new org.apache.hadoop.fs.Path(dir)
@@ -1067,10 +1004,7 @@ object SparkEntry {
       import org.apache.spark.sql.functions.{col, md5, substring}
       val emb = Tables.embeddings(s, d)
       val storedSide = substring(md5(col("vec_id").cast("string")), 1, 1) < "8"
-      val dir = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_ivf_inca_" + new java.io.File(d).getName + "_" +
-          s.sparkContext.applicationId).getPath
-      graft.Tables.deleteOnExit(dir)
+      val dir = privateDir(s, "graft_ivf_inca_", d)
       val dp = new org.apache.hadoop.fs.Path(dir)
       dp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(dp, true)
       IvfIncremental.init(emb.filter(storedSide), dir)
@@ -1087,10 +1021,7 @@ object SparkEntry {
       import org.apache.spark.sql.functions.{col, lit, md5, substring}
       val emb = Tables.embeddings(s, d)
       val h = substring(md5(col("vec_id").cast("string")), 1, 1)
-      val dir = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_ivf_incfs_" + new java.io.File(d).getName + "_" +
-          s.sparkContext.applicationId).getPath
-      graft.Tables.deleteOnExit(dir)
+      val dir = privateDir(s, "graft_ivf_incfs_", d)
       val dp = new org.apache.hadoop.fs.Path(dir)
       dp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(dp, true)
       IvfIncremental.init(emb.filter(h < "8"), dir)
@@ -1291,10 +1222,7 @@ object SparkEntry {
     "q_ivfadc_store_probe" -> ((s, d) => {
       import org.apache.spark.sql.functions.col
       val emb = Tables.embeddings(s, d)
-      val dir = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_ivfadc_store_" + new java.io.File(d).getName + "_" +
-          s.sparkContext.applicationId).getPath
-      graft.Tables.deleteOnExit(dir)
+      val dir = privateDir(s, "graft_ivfadc_store_", d)
       Similarity.ivfIndexStoreInit(emb, dir)
       Similarity.ivfIndexStorePqBuild(s, dir, residual = true)
       Similarity.ivfIndexStorePqProbe(s, emb.filter(col("vec_id") < 10), dir)
@@ -1306,10 +1234,7 @@ object SparkEntry {
     "q_ivfadc_store_probe_trained" -> ((s, d) => {
       import org.apache.spark.sql.functions.col
       val emb = Tables.embeddings(s, d)
-      val dir = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_ivfadc_store_tr_" + new java.io.File(d).getName + "_" +
-          s.sparkContext.applicationId).getPath
-      graft.Tables.deleteOnExit(dir)
+      val dir = privateDir(s, "graft_ivfadc_store_tr_", d)
       Similarity.ivfIndexStoreInit(emb, dir)
       Similarity.ivfIndexStoreTrain(s, dir)
       Similarity.ivfIndexStorePqBuild(s, dir, residual = true)
@@ -1340,10 +1265,7 @@ object SparkEntry {
     "q_ivfpq_store_probe" -> ((s, d) => {
       import org.apache.spark.sql.functions.col
       val emb = Tables.embeddings(s, d)
-      val dir = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_ivfpq_store_" + new java.io.File(d).getName + "_" +
-          s.sparkContext.applicationId).getPath
-      graft.Tables.deleteOnExit(dir)
+      val dir = privateDir(s, "graft_ivfpq_store_", d)
       Similarity.ivfIndexStoreInit(emb, dir)
       Similarity.ivfIndexStorePqBuild(s, dir)
       Similarity.ivfIndexStorePqProbe(s, emb.filter(col("vec_id") < 10), dir)
@@ -1360,10 +1282,7 @@ object SparkEntry {
     "q_ivfpq_store_probe_trained" -> ((s, d) => {
       import org.apache.spark.sql.functions.col
       val emb = Tables.embeddings(s, d)
-      val dir = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_ivfpq_store_tr_" + new java.io.File(d).getName + "_" +
-          s.sparkContext.applicationId).getPath
-      graft.Tables.deleteOnExit(dir)
+      val dir = privateDir(s, "graft_ivfpq_store_tr_", d)
       Similarity.ivfIndexStoreInit(emb, dir)
       Similarity.ivfIndexStorePqBuild(s, dir)
       Similarity.ivfIndexStoreTrain(s, dir)
@@ -1372,10 +1291,7 @@ object SparkEntry {
     "q_ivfpq_store_probe_opq" -> ((s, d) => {
       import org.apache.spark.sql.functions.col
       val emb = Tables.embeddings(s, d)
-      val dir = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_ivfpq_store_opq_" + new java.io.File(d).getName + "_" +
-          s.sparkContext.applicationId).getPath
-      graft.Tables.deleteOnExit(dir)
+      val dir = privateDir(s, "graft_ivfpq_store_opq_", d)
       Similarity.ivfIndexStoreInit(emb, dir)
       Similarity.ivfIndexStorePqBuild(s, dir,
         layout = Similarity.opqPermutation(64))
@@ -1634,7 +1550,7 @@ object SparkEntry {
     // band-bucket cap ON, the shape a cluster actually runs — so the
     // driver's timed suite tracks both the guard-off oracle shape and
     // the production shape (previously the production numbers lived
-    // only in StressBench). Rows-only BY DESIGN: the cap may prune
+    // only in a separate stress harness). Rows-only BY DESIGN: the cap may prune
     // degenerate band buckets, so dup flags can diverge from the exact
     // oracle; CurationSpec pins prod dup flags ⊆ guard-off flags and
     // junk/quality gates identical.

@@ -892,14 +892,6 @@ object Curation {
     Seq("image", "audio", "video")
       .map(s => s -> storeSwapRecover(spark, s"$storeDir/$s")).toMap
 
-  /** [[storeSwapRecover]] over every table of a text fingerprint
-    * store ([[docIngestStoreInit]]'s layout).
-    */
-  def docIngestStoreRecover(spark: org.apache.spark.sql.SparkSession,
-                            storeDir: String): Map[String, String] =
-    Seq("urls", "texts", "sigs")
-      .map(s => s -> storeSwapRecover(spark, s"$storeDir/$s")).toMap
-
   /** Staged, crash-recoverable rewrite of one parquet store dir —
     * shared by the media, text, and embedding compactions. Reads the
     * live store, applies `compact`, writes the result to a staging

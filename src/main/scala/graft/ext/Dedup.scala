@@ -72,7 +72,7 @@ object Dedup {
     // persisted: it is one cheap anti-join away from cached `sh`, and a
     // second near-identical cached copy costs more to build than the
     // anti-join costs to recompute (measured: double-persist regressed
-    // the query 2.6× in BENCH_r04).
+    // the query 2.6× in the round-4 bench).
     val sh = shingles(documents, k).persist()
     val result = ngramJaccardFromShingles(sh, threshold, maxShingleDf)
     scopeCaches(result, sh)
@@ -240,7 +240,7 @@ object Dedup {
     // — and therefore the emitted pairs — are identical to the direct
     // form (pinned in DedupSpec). OFF by default: at dimension-table
     // corpus sizes the extra distinct+semi-join stages cost more than
-    // they save (StressBench ×20 A/B in RESULTS.md).
+    // they save (×20 replication A/B in RESULTS.md).
     val verifySh = if (pruneVerifyShingles) {
       val candDocs = cand.select(col("doc_a").as("doc_id"))
         .unionByName(cand.select(col("doc_b").as("doc_id"))).distinct()

@@ -608,8 +608,8 @@ object Multimodal {
     * doc_id is a SILENT clip (all-zero samples — every energy window 0,
     * so ALL of them share the all-zeros eHash, the dead-air mass a real
     * ingest contains). The rest follow the clustered PCM pattern. This
-    * is the skew-stress fixture for the audio band-bucket cap A/B
-    * (StressBench): with the guard off, the silent fraction piles into
+    * is the skew-stress fixture for the audio band-bucket cap A/B:
+    * with the guard off, the silent fraction piles into
     * one (band, value) bucket per band and the join goes quadratic in
     * it on the daily incremental path.
     */
@@ -997,7 +997,7 @@ object Multimodal {
     * along each row, so ALL of them share the all-zeros dHash, the
     * flat/monochrome mass a real web crawl contains. The rest follow
     * the high-frequency cluster pattern. This is the skew-stress
-    * fixture for the band-bucket cap A/B (StressBench): with the guard
+    * fixture for the band-bucket cap A/B: with the guard
     * off, the flat fraction piles into one (band, value) bucket per
     * band and the self-join goes quadratic in it.
     */

@@ -403,7 +403,7 @@ object Similarity {
     // transform-with-scale quantization re-inlines the scale alias into
     // the lambda after projection collapse, re-running array_max per
     // ELEMENT — O(dim²) per row (measured together: 23.7s vs the float
-    // scan's 2.4s at StressBench ×10, the opposite of what a quantized
+    // scan's 2.4s at ×10 replication, the opposite of what a quantized
     // scan is for)
     val base = embeddings
       .select(col("vec_id"), int8_codes(col("embedding")).as("qv"))
@@ -1067,7 +1067,7 @@ object Similarity {
   /** The UNROLLED twin of [[seedScoreArray]] — one
     * `struct(int_dot(qv, lit(cv)) / sqrt(...), -cid)` per centroid.
     * Kept as the reference implementation for the native≡unrolled spec
-    * pin and the StressBench codegen-size A/B: at small nList the two
+    * pin and the codegen-size A/B: at small nList the two
     * plans are equally fast; past a few hundred centroids the unrolled
     * generated code outgrows JIT/Janino method budgets while the native
     * loop stays flat.
@@ -1089,7 +1089,7 @@ object Similarity {
     * the whole inlined 16-struct score array into a pre-join Filter
     * (re-evaluated per input row), and the blown-up stage loses
     * whole-stage codegen — measured 11.6s vs 0.3s for a 16×16-row join
-    * at StressBench ×10. With a provably non-null key the inferred
+    * at ×10 replication. With a provably non-null key the inferred
     * check folds to TRUE and vanishes. -1 is unreachable (the seed
     * array is non-empty by construction).
     */
@@ -3095,36 +3095,6 @@ object Similarity {
       .select(col("vec_id"), col("pq.codes").as("pcodes"), col("pq.rsq").as("rsq"))
   }
 
-  /** ADC top-k over an EXISTING PQ code store — the scan a persisted
-    * PQ index actually runs (codes + rsq written once; queries arrive
-    * as floats and quantize on the bounded side only). The corpus-side
-    * read is nSub bytes + one long per vector; per pair, nSub lookup
-    * adds off the per-query table.
-    */
-  def pqStoredTopK(pqCodes: DataFrame, queryVecs: DataFrame,
-                   matrix: Array[Int], nSub: Int = 8,
-                   numQueries: Int = 10, k: Int = 5): DataFrame = {
-    graft.functions.GraftFunctions.register(pqCodes.sparkSession)
-    import graft.functions.PqCodes.{pq_lut, pq_adc}
-    val q = quantizedQv(queryVecs).filter(col("qsq") > 0)
-      .filter(col("vec_id") < numQueries)
-      .select(col("vec_id").as("query_id"),
-        pq_lut(col("qv"), matrix, nSub).as("lut"), col("qsq").as("sqa"))
-    val sims = pqCodes
-      .select(col("vec_id").as("neighbor_id"), col("pcodes"), col("rsq"))
-      .join(broadcast(q), col("neighbor_id") =!= col("query_id"))
-      .withColumn("adc_dot", pq_adc(col("lut"), col("pcodes")))
-      .withColumn("sim", when(col("rsq") === 0, lit(0.0))
-        .otherwise(col("adc_dot") /
-          sqrt(col("sqa").cast("double") * col("rsq").cast("double"))))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    sims.withColumn("rnk", row_number().over(w)).filter(col("rnk") <= k)
-      .select(col("query_id"), col("rnk"), col("neighbor_id"),
-        col("adc_dot"), round(col("sim"), 6).as("pq_sim"))
-      .orderBy("query_id", "rnk")
-  }
-
   /** Per-vector PQ encoding audit (`q_pq_encode`): the code ids, the
     * exact summed distortion (the build-quality number — what a real
     * pipeline tracks to size nBook/nSub), and the reconstruction's
@@ -3335,7 +3305,7 @@ object Similarity {
     // select that mixes a generator with a heavy expression puts that
     // expression in the Project ABOVE the Generate, where it re-runs
     // once per EXPLODED row — measured 64 encodes/vector, 30s vs 2s a
-    // round at StressBench ×100 (the round-12 re-evaluation cliff, the
+    // round at ×100 replication (the round-12 re-evaluation cliff, the
     // Generate variant). As a pass-through column the entry ids are
     // computed once per vector and only COPIED per row.
     val cells = codes

@@ -1168,7 +1168,7 @@ object TextOps {
 
   /** The pruning instrument: (result, scored-pair count via the pruned
     * protocol, total matched pairs the unpruned ranker scores) — what
-    * the StressBench row prices and the spec pins.
+    * the ×10 stress runs priced and the spec pins.
     */
   private[ext] def bm25PrunedInternal(
       spark: org.apache.spark.sql.SparkSession, dir: String,

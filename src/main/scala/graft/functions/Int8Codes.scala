@@ -19,7 +19,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
   * projection collapse, so `array_max(transform(emb, abs))` is
   * re-evaluated for EVERY element — O(dim²) interpreted work per row
   * (measured: the quantized ANN scan spent ~20s of its 23.7s
-  * StressBench ×10 wall quantizing 20k vectors of dim 64). The scan
+  * wall at ×10 replication quantizing 20k vectors of dim 64). The scan
   * stage of the quantized tier must be a codegen loop, or the
   * bandwidth saving it exists for is drowned by evaluation overhead.
   *

@@ -14,7 +14,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
   * The composed `aggregate(zip_with(...))` form computes the same
   * number but runs INTERPRETED (higher-order lambdas don't participate
   * in whole-stage codegen) with a boxed Long per element — measured 18×
-  * slower than the float scan at StressBench ×10, i.e. the opposite of
+  * slower than the float scan at ×10 replication, i.e. the opposite of
   * what a quantized scan exists for. This expression is the same
   * (b)-tier move as [[CosineSimilarity]]: one fused codegen loop, no
   * intermediate arrays, products widened to long before accumulation.

@@ -23,10 +23,10 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, LongType}
   * dot/norm loop runs straight over the column vector's primitive
   * storage, one pass per batch (the same reason real columnar engines
   * splice themselves in at exactly this boundary). Measured honestly
-  * (MicroBench `scan_score_2m`): at 64-dim the scan dominates and the
-  * fused path only matches the codegen expression path — the tier's
-  * value here is the working extension point with bit-exact semantics;
-  * the copy saving grows with vector width.
+  * (a 2M-row scan-and-score microbenchmark): at 64-dim the scan
+  * dominates and the fused path only matches the codegen expression
+  * path — the tier's value here is the working extension point with
+  * bit-exact semantics; the copy saving grows with vector width.
   *
   * Wiring: [[VectorizedCosineStrategy]] plans the logical node as a
   * ROW-based exec; Spark then inserts `ColumnarToRowExec` above the

@@ -64,6 +64,28 @@ class DriverContractSpec extends AnyFunSuite {
       s"queries missing from COVERAGE.md: ${undocumented.toSeq.sorted}")
   }
 
+  test("the only mains under src/main are Bench, Verify, Explain and pipeline.RunCapstone") {
+    // One harness: perfbench measures, Verify + the oracle certify. A
+    // second timing main growing back beside Bench fails here.
+    import scala.jdk.CollectionConverters._
+    val Package = """package\s+([\w.]+).*""".r
+    val Obj = """\s*(?:private\s+|case\s+)?object\s+(\w+).*""".r
+    val Main = """\s*def\s+main\s*\(.*""".r
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+    val mains = try files.iterator.asScala.filter(_.toString.endsWith(".scala")).flatMap { f =>
+      var pkg = ""
+      var obj = ""
+      java.nio.file.Files.readAllLines(f).asScala.flatMap {
+        case Package(p) => pkg = p; None
+        case Obj(o) => obj = o; None
+        case Main() => Some(s"$pkg.$obj")
+        case _ => None
+      }
+    }.toSet finally files.close()
+    assert(mains === Set("graft.Bench", "graft.Verify", "graft.Explain",
+      "graft.pipeline.RunCapstone"))
+  }
+
   test("oracle coverage tally matches COVERAGE.md's Totals line") {
     val total = SparkEntry.queries.size
     val oracle = (SparkEntry.queries.keySet & SparkEntry.oracleSql.keySet).size

@@ -583,7 +583,7 @@ class CurationSpec extends AnyFunSuite with SparkSpec {
   test("composition cache hygiene: every media composition releases all its intermediates") {
     // the compositions persist fused-stats / cluster / verdict / pair
     // frames internally; a long-lived session (streaming daily loop,
-    // StressBench sweeps) calls them repeatedly, so anything left
+    // stress sweeps) calls them repeatedly, so anything left
     // cached after the result is released is a leak that accumulates
     import org.apache.spark.sql.functions.col
     val base = graft.Tables.documents(spark, "/root/testdata/sf0.001")
